@@ -56,7 +56,6 @@ object ChessPipeline {
   }
 
   private val ResultRev: Column = {
-    val m = Map("1-0" -> "0-1", "0-1" -> "1-0")
     val c = col("Result")
     when(c === "1-0", "0-1").when(c === "0-1", "1-0").otherwise(c)
   }

@@ -4,11 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The ONE incremental-ingest core both drivers share: parsed games →
-  * (optional ndjson debug dump) → running stats with prior-state carry
-  * → role doubling → partitioned sink, then the crash-safe state
+  * running stats with prior-state carry → role doubling → partitioned sink, then the crash-safe state
   * commit carrying the applied-work-id set ([[StateSwap.Applied]]).
   *
-  * [[IngestMain]] (batch CLI, one month / month range per call) and
+  * [[IngestMain]] (batch CLI, one call per grouped pass of months) and
   * [[StreamIngest]] (continuous foreachBatch) used to each spell this
   * sequence out; any drift between the two copies — commit ordering,
   * the applied-id carry, the cache window — would silently fork their
@@ -20,38 +19,32 @@ private[chess] object IngestCore {
   def fsFor(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Is this work unit already folded into the committed state? */
-  def alreadyApplied(spark: SparkSession, stateDir: Option[String],
-      id: Long): Boolean =
-    stateDir.exists { d =>
+  /** The work-unit ids folded into the committed state (none without
+    * a state dir or a committed copy).
+    */
+  def appliedIds(spark: SparkSession, stateDir: Option[String]): Set[Long] =
+    stateDir.flatMap { d =>
       val fs = fsFor(spark, d)
-      StateSwap.resolve(fs, d)
-        .exists(p => StateSwap.appliedIds(fs, p).contains(id))
-    }
+      StateSwap.resolve(fs, d).map(StateSwap.appliedIds(fs, _))
+    }.getOrElse(Set.empty)
 
   /** Run one parsed-games batch through the core. Returns false (a
-    * no-op) when `appliedId` is already in the committed state's
-    * applied set — the replay / crashed-rerun guard; true when the
-    * batch was applied.
+    * no-op) when every id of `appliedIds` is already in the committed
+    * state's applied set — the replay / crashed-rerun guard; true when
+    * the batch was applied. `appliedIds` are the work units the batch
+    * holds (the months of a grouped [[IngestMain]] pass, or one
+    * stream batch id), in order; they commit together, atomically with
+    * the counters. A batch whose ids are only partly applied is
+    * refused: applying it would count the applied part twice.
     *
     * `extraPartition` appends sink partition key(s) UNDER year_month
     * (the streaming driver passes its batch id so dynamic overwrite
     * replays idempotently without a later same-month batch clobbering
-    * an earlier one's rows). `ndjson` = (dir, name) adds the debug
-    * JSON-lines dump of the parsed games; `ndjsonSize` = Some(N)
-    * rolls that dump into `_roll=K` subdirectories of N games each in
-    * parse order — the reference's `--ndjson-size` spill-roll knob
-    * (ingest_lichess.py:38, ingester.py:237-252: a new ndjson file
-    * every N games), content identical to the unrolled dump (the
-    * roll only CUTS the same game sequence). The game ordinal comes
-    * from zipWithIndex over the cached parse — the input-split order,
-    * the columnar analog of the reference's sequential file order.
+    * an earlier one's rows).
     */
   def applyGames(spark: SparkSession, games: DataFrame, outDir: String,
-      stateDir: Option[String], appliedId: Option[Long] = None,
+      stateDir: Option[String], appliedIds: Seq[Long] = Nil,
       extraPartition: Seq[(String, Column)] = Nil,
-      ndjson: Option[(String, String)] = None,
-      ndjsonSize: Option[Long] = None,
       compression: String = "snappy",
       calendarCarry: Boolean = false): Boolean = {
     val curState = stateDir.flatMap { d =>
@@ -61,38 +54,30 @@ private[chess] object IngestCore {
     }
     val applied = (for (d <- stateDir; p <- curState)
       yield StateSwap.appliedIds(fsFor(spark, d), p)).getOrElse(Set.empty[Long])
-    if (appliedId.exists(applied.contains))
+    val done = appliedIds.filter(applied.contains)
+    if (appliedIds.nonEmpty && done.size == appliedIds.size)
       return false // already fully applied and committed
+    require(done.isEmpty, s"work units ${done.mkString(",")} are already " +
+      s"applied but ${appliedIds.filterNot(applied.contains).mkString(",")} " +
+      "are not: apply only the missing ones")
     // calendarCarry = the reference's calendar-keyed counter restart
     // (ingester.py:60-86: prior counters come from the
     // calendar-PREVIOUS month's state file; absent => restart): when
-    // the work unit's predecessor id was never applied, drop the
-    // prior COUNTERS but keep the applied-id set (idempotence is not
-    // a reference semantics knob)
+    // the first work unit's predecessor id was never applied, drop
+    // the prior COUNTERS but keep the applied-id set (idempotence is
+    // not a reference semantics knob). Later units of the batch carry
+    // from the earlier ones: IngestMain.groups starts a new batch at
+    // every unit that would restart.
     val restart = calendarCarry &&
-      appliedId.exists(id => !applied.contains(id - 1))
+      appliedIds.headOption.exists(id => !applied.contains(id - 1))
     val prior =
       if (restart) None
       else curState.map(p => spark.read.parquet(p.toString))
-    // parsed once: the sink, the state aggregation and the optional
-    // ndjson dump all consume `games` — uncached, each would re-run
-    // the full decompress+parse (the dominant cost of an ingest)
+    // parsed once: the sink and the state aggregation both consume
+    // `games` — uncached, each would re-run the full decompress+parse
+    // (the dominant cost of an ingest)
     val g = games.cache()
     try {
-      ndjson.foreach { case (dir, name) =>
-        ndjsonSize match {
-          case Some(n) =>
-            require(n >= 1, s"ndjson-size must be >= 1, got $n")
-            val rolled = spark.createDataFrame(
-              g.rdd.zipWithIndex().map { case (r, i) =>
-                org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i / n) },
-              g.schema.add("_roll", org.apache.spark.sql.types.LongType))
-            rolled.write.mode("overwrite")
-              .partitionBy("_roll").json(s"$dir/$name")
-          case None =>
-            g.write.mode("overwrite").json(s"$dir/$name")
-        }
-      }
       val doubled = extraPartition.foldLeft(
         ChessPipeline.toPlayerGameRole(ChessPipeline.withStats(g, prior))) {
         case (df, (name, value)) => df.withColumn(name, value)
@@ -109,7 +94,7 @@ private[chess] object IngestCore {
         ChessPipeline.statsState(g, prior)
           .write.mode("overwrite").parquet(next)
         val fs = fsFor(spark, d)
-        StateSwap.writeApplied(fs, new Path(next), applied ++ appliedId)
+        StateSwap.writeApplied(fs, new Path(next), applied ++ appliedIds)
         StateSwap.commit(fs, d)
       }
       true

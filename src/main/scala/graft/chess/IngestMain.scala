@@ -27,7 +27,8 @@ import org.apache.spark.sql.SparkSession
   *
   * `--dir-ndjson=DIR`: the reference CLI's debug knob
   * (ingest_lichess.py:37): additionally dump the parsed games as
-  * JSON lines (one subdir per input). Debug output only — the
+  * JSON lines (one subdir per input; each input of a grouped pass is
+  * read and dumped on its own). Debug output only — the
   * reference uses ndjson as its parser's internal spill format, which
   * a columnar pipeline has no equivalent of. `--ndjson-size=N`
   * (ingest_lichess.py:38, default unset here = one dump) rolls the
@@ -36,31 +37,64 @@ import org.apache.spark.sql.SparkSession
   *
   * `--start`/`--end`: the reference's RANGE entry point
   * (ingest_lichess.py:18-27 loops `range(start, end)` years × a month
-  * list; flags at :31-33) — each month in the inclusive [start, end]
-  * month range is fetched and ingested in order, with the per-player
-  * counters carried month to month exactly as the reference's
-  * in-process loop carries them (its `cum_files_{y}_{m}` state,
-  * ingester.py:60-86). `--months=M1,M2,...` keeps only those
-  * months-of-year within the range (the reference's explicit month
-  * list — "Januaries of 2015-2020" is not a contiguous range).
-  * Divergences, documented: the range here is month-granular and
-  * end-INCLUSIVE (the reference takes year endpoints, end-exclusive)
-  * — the same ranges are expressible, without the surprise of
-  * `--end`'s year never being processed. Under a sparse `--months`
-  * subset the reference silently RESTARTS the per-player counters
-  * each month: its state file is keyed by the calendar-PREVIOUS
-  * month (`cum_files_{y}_{m-1}`, ingester.py:60-86), which a subset
-  * never wrote, so its FileNotFoundError fallback recreates empty
-  * counters; here the committed state carries across the months
-  * actually ingested, in order — cumulative over the ingested
-  * sequence, which is what the counters are for. (The reference's
-  * `restart_counter_games` parameter is dead code: defined at
-  * ingest_lichess.py:9 with default True, never forwarded.)
-  * `--calendar-counters` (round 12) opts into the reference's
-  * byte-for-byte calendar-keyed behavior: a month whose CALENDAR
-  * predecessor is not in the committed applied set restarts its
-  * counters from zero — replaying "Januaries of 2015-2020" then
-  * matches the reference exactly.
+  * list; flags at :31-33) — every month in the inclusive [start, end]
+  * month range is fetched and ingested, with the per-player counters
+  * carried month to month exactly as the reference's in-process loop
+  * carries them (its `cum_files_{y}_{m}` state, ingester.py:60-86).
+  * `--months=M1,M2,...` keeps only those months-of-year within the
+  * range (the reference's explicit month list — "Januaries of
+  * 2015-2020" is not a contiguous range). Divergences, documented:
+  * the range here is month-granular and end-INCLUSIVE (the reference
+  * takes year endpoints, end-exclusive) — the same ranges are
+  * expressible, without the surprise of `--end`'s year never being
+  * processed. Under a sparse `--months` subset the reference silently
+  * RESTARTS the per-player counters each month: its state file is
+  * keyed by the calendar-PREVIOUS month (`cum_files_{y}_{m-1}`,
+  * ingester.py:60-86), which a subset never wrote, so its
+  * FileNotFoundError fallback recreates empty counters; here the
+  * committed state carries across the months actually ingested, in
+  * order — cumulative over the ingested sequence, which is what the
+  * counters are for. (The reference's `restart_counter_games`
+  * parameter is dead code: defined at ingest_lichess.py:9 with
+  * default True, never forwarded.) `--calendar-counters` (round 12)
+  * opts into the reference's byte-for-byte calendar-keyed behavior: a
+  * month whose CALENDAR predecessor is not in the committed applied
+  * set restarts its counters from zero — replaying "Januaries of
+  * 2015-2020" then matches the reference exactly.
+  *
+  * '''Grouped passes.''' The months left to do (the `--months` filter
+  * applied, the months already in the committed applied set dropped)
+  * run as a few passes of several months each ([[groups]]), not one
+  * pass per month. A pass fetches its months, reads all of them with
+  * one PGN scan, and runs ONE parse → running stats → role doubling →
+  * sink → state commit over them ([[IngestCore.applyGames]]). A
+  * compressed month is one scan partition, so a pass holds at most
+  * `defaultParallelism` months — one scan task per core — and pays the
+  * per-pass fixed cost (planning, the range-sink sampling job, the
+  * state write and swap) once for all of them. Under
+  * `--calendar-counters` a new pass starts at every month whose
+  * counters restart. `--month` and a plain `<pgnPath>` are one-element
+  * passes of the same code.
+  *
+  * Exactness: the running counters follow `(DateTime, ID)` order and
+  * the prior state offsets every game of a pass alike. When the dumps
+  * are month-aligned (the month-M dump holds exactly the games played
+  * in M — lichess's are, and the dynamic-overwrite sink already
+  * assumes it), every game of an earlier month of a pass sorts before
+  * every game of a later one, so a grouped pass yields the same
+  * counters, sink rows and state as chained one-month passes. The same
+  * holds across a gap — a middle month committed earlier is in the
+  * prior state either way. A pass's month ids commit atomically WITH
+  * its counters; a crash mid-pass leaves none of them committed, the
+  * re-run repeats the whole pass, and dynamic partition overwrite
+  * makes the re-written months idempotent.
+  *
+  * Scale note: at cluster width one pass spans every month of a range,
+  * so a hot player's window partition covers the whole pass, not one
+  * month, and the pass caches the parse of all its months. The
+  * bucketed running-stats formulation ([[ChessPipeline.withStats]]
+  * `bucketed = true`) bounds the window per player-month; it is not
+  * selected here.
   *
   * `--compression=CODEC`: parquet codec for the monthly sink. Default
   * snappy (decode speed); `--compression=gzip` reproduces the
@@ -208,16 +242,10 @@ object IngestMain {
       else ChessPipeline.MovesMode.Omitted
     // the reference's --dir-ndjson debug knob (ingest_lichess.py:37,
     // "only recommended for debugging"): also dump the PARSED GAMES
-    // as JSON lines — Spark's json sink IS ndjson — one subdir per
-    // input. In the reference ndjson is the parser's internal spill
-    // format; here the pipeline is columnar end-to-end, so this is
-    // debug output only, not a processing stage. `--ndjson-size=N`
-    // (ingest_lichess.py:38, default 1e6) is the reference's roll
-    // knob — its spill starts a new ndjson file every N games; here
-    // it rolls the dump into `_roll=K` subdirectories of N games each
-    // in parse order (content identical to the unrolled dump).
+    // as JSON lines (see [[dumpNdjson]])
     val ndjsonDir = rawArgs.collectFirst { case NdjsonArg(d) => d }
     val ndjsonSize = rawArgs.collectFirst { case NdjsonSizeArg(n) => n.toLong }
+    ndjsonSize.foreach(n => require(n >= 1, s"ndjson-size must be >= 1, got $n"))
     // the reference's IMPLICIT calendar-keyed counter carry
     // (ingester.py:60-86: prior counters load from the
     // calendar-PREVIOUS month's state file, cum_files_{y}_{m-1};
@@ -241,72 +269,100 @@ object IngestMain {
     validateArgs(args)
     require(subset.isEmpty || args(0).startsWith("--start"),
       "--months only applies to a --start/--end range")
+    // one grouped pass: the ndjson debug dumps, then ONE scan of
+    // every input and one run of the shared core, whose state commit
+    // records `ids`
+    def ingestGroup(inputs: Seq[String], ids: Seq[Long], outDir: String,
+        stateDir: Option[String]): Unit = {
+      ndjsonDir.foreach(d => inputs.foreach(dumpNdjson(spark, _, movesMode, d, ndjsonSize)))
+      val raw = spark.read.format("pgn").load(inputs: _*)
+      IngestCore.applyGames(spark, ChessPipeline.parseGames(raw, movesMode),
+        outDir, stateDir, ids, compression = compression,
+        calendarCarry = calendarCarry)
+    }
+    // months by id, in grouped passes. Already-applied months are
+    // skipped BEFORE fetching (the reference's "exists. Skipping"
+    // check, ingest_lichess.py:24-26, keyed on committed STATE rather
+    // than output existence) — which is also what makes a crashed
+    // range re-run safe: committed months are no-ops instead of
+    // double-applying their games to the counters
+    def ingestMonths(ids: Seq[Long], outDir: String, stateDir: Option[String]): Unit = {
+      val applied = IngestCore.appliedIds(spark, stateDir)
+      for (id <- ids if applied.contains(id))
+        System.err.println(f"[ingest] ${id / 12}%04d-${id % 12 + 1}%02d already applied. Skipping...")
+      for (group <- groups(ids, applied, spark.sparkContext.defaultParallelism, calendarCarry))
+        ingestGroup(group.map(id => Acquire.fetchMonth((id / 12).toInt,
+          (id % 12 + 1).toInt, stagingDir, baseUrl).toString), group, outDir, stateDir)
+    }
     args(0) match {
       case StartArg(y1, m1) =>
         val EndArg(y2, m2) = (args(1): @unchecked)
-        val outDir = args(2)
         // the month-to-month counter carry is NOT optional for a
         // range (the reference's loop carries counters in one
         // process): without a caller-provided stateDir the carry
         // still runs through a run-local state dir
         val stateDir = args.lift(3).getOrElse(
           java.nio.file.Files.createTempDirectory("graft_range_state").toString)
-        for ((y, m) <- monthRange(y1.toInt, m1.toInt, y2.toInt, m2.toInt)
-            if subset.forall(_.contains(m))) {
-          // already-applied months are skipped BEFORE fetching (the
-          // reference's "exists. Skipping" check,
-          // ingest_lichess.py:24-26, keyed on committed STATE rather
-          // than output existence) — which is also what makes a
-          // crashed range re-run safe: committed months are no-ops
-          // instead of double-applying their games to the counters
-          if (!alreadyApplied(spark, Some(stateDir), monthId(y, m))) {
-            val staged = Acquire.fetchMonth(y, m, stagingDir, baseUrl)
-            ingestOne(spark, staged.toString, outDir, Some(stateDir), movesMode,
-              ndjsonDir, ndjsonSize, appliedId = Some(monthId(y, m)),
-              compression = compression, calendarCarry = calendarCarry)
-          } else
-            System.err.println(f"[ingest] $y%04d-$m%02d already applied. Skipping...")
-        }
+        val ids = for ((y, m) <- monthRange(y1.toInt, m1.toInt, y2.toInt, m2.toInt)
+            if subset.forall(_.contains(m))) yield monthId(y, m)
+        ingestMonths(ids, args(2), Some(stateDir))
       case MonthArg(y, m) =>
-        val id = monthId(y.toInt, m.toInt)
-        if (!alreadyApplied(spark, args.lift(2), id)) {
-          val staged = Acquire.fetchMonth(y.toInt, m.toInt, stagingDir, baseUrl)
-          ingestOne(spark, staged.toString, args(1), args.lift(2), movesMode,
-            ndjsonDir, ndjsonSize, appliedId = Some(id),
-            compression = compression, calendarCarry = calendarCarry)
-        } else
-          System.err.println(s"[ingest] ${args(0).stripPrefix("--month=")} already applied. Skipping...")
+        ingestMonths(Seq(monthId(y.toInt, m.toInt)), args(1), args.lift(2))
       case pgnPath =>
         // arbitrary-path inputs have no natural work-unit id: no skip
-        ingestOne(spark, pgnPath, args(1), args.lift(2), movesMode, ndjsonDir,
-          ndjsonSize, compression = compression)
+        ingestGroup(Seq(pgnPath), Nil, args(1), args.lift(2))
     }
   }
 
-  private def monthId(y: Int, m: Int): Long = y.toLong * 12 + (m - 1)
+  private[chess] def monthId(y: Int, m: Int): Long = y.toLong * 12 + (m - 1)
 
-  private def alreadyApplied(spark: SparkSession, stateDir: Option[String],
-      id: Long): Boolean = IngestCore.alreadyApplied(spark, stateDir, id)
-
-  /** One PGN input → the month-partitioned sink, via the shared
-    * [[IngestCore.applyGames]] (ONE commit protocol for the batch and
-    * streaming drivers).
+  /** The grouped passes of a month-id list (ids as [[monthId]], in
+    * chronological order): `todo` minus the `applied` months, split
+    * into runs of at most `width` months. With `calendarCarry` a new
+    * run also starts at every month whose calendar predecessor is
+    * neither applied nor earlier in `todo` — the months whose counters
+    * restart, which [[IngestCore.applyGames]] can only do at the head
+    * of a pass.
     */
-  private def ingestOne(spark: SparkSession, pgnPath: String, outDir: String,
-      stateDir: Option[String],
-      movesMode: ChessPipeline.MovesMode = ChessPipeline.MovesMode.Omitted,
-      ndjsonDir: Option[String] = None,
-      ndjsonSize: Option[Long] = None,
-      appliedId: Option[Long] = None,
-      compression: String = "snappy",
-      calendarCarry: Boolean = false): Unit = {
-    val raw = spark.read.format("pgn").load(pgnPath)
-    IngestCore.applyGames(spark,
-      ChessPipeline.parseGames(raw, movesMode), outDir, stateDir, appliedId,
-      ndjson = ndjsonDir.map(d =>
-        (d, new org.apache.hadoop.fs.Path(pgnPath).getName)),
-      ndjsonSize = ndjsonSize,
-      compression = compression,
-      calendarCarry = calendarCarry)
+  private[chess] def groups(todo: Seq[Long], applied: Set[Long], width: Int,
+      calendarCarry: Boolean): Seq[Seq[Long]] = {
+    val left = todo.filterNot(applied.contains)
+    val seen = applied ++ left
+    def restarts(id: Long): Boolean = calendarCarry && !seen.contains(id - 1)
+    left.foldLeft(Vector.empty[Vector[Long]]) {
+      case (done :+ open, id) if open.size < width && !restarts(id) =>
+        done :+ (open :+ id)
+      case (done, id) => done :+ Vector(id)
+    }
+  }
+
+  /** The `--dir-ndjson` debug dump of one input: its parsed games as
+    * JSON lines — Spark's json sink IS ndjson — under
+    * `dir/<input name>`. In the reference ndjson is the parser's
+    * internal spill format; here the pipeline is columnar end to end,
+    * so this is debug output only, read apart from the ingest's own
+    * scan. `size` = Some(N) is the reference's `--ndjson-size` roll
+    * knob (ingest_lichess.py:38, ingester.py:237-252: a new ndjson
+    * file every N games): the dump rolls into `_roll=K`
+    * subdirectories of N games each, content identical to the
+    * unrolled dump (the roll only CUTS the same game sequence). The
+    * game ordinal comes from zipWithIndex over the parse — the
+    * input-split order, the columnar analog of the reference's
+    * sequential file order.
+    */
+  private def dumpNdjson(spark: SparkSession, input: String,
+      movesMode: ChessPipeline.MovesMode, dir: String, size: Option[Long]): Unit = {
+    val g = ChessPipeline.parseGames(spark.read.format("pgn").load(input), movesMode)
+    val out = s"$dir/${new org.apache.hadoop.fs.Path(input).getName}"
+    size match {
+      case Some(n) =>
+        val rolled = spark.createDataFrame(
+          g.rdd.zipWithIndex().map { case (r, i) =>
+            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i / n) },
+          g.schema.add("_roll", org.apache.spark.sql.types.LongType))
+        rolled.write.mode("overwrite").partitionBy("_roll").json(out)
+      case None =>
+        g.write.mode("overwrite").json(out)
+    }
   }
 }

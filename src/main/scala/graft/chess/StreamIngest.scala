@@ -68,7 +68,7 @@ object StreamIngest {
     // commit — ONE protocol with the batch driver, nothing to drift
     IngestCore.applyGames(spark,
       ChessPipeline.parseGames(rawBatch, movesMode), outDir, Some(stateDir),
-      appliedId = Some(batchId),
+      appliedIds = Seq(batchId),
       extraPartition = Seq(
         "ingest_batch" -> org.apache.spark.sql.functions.lit(batchId)))
 }

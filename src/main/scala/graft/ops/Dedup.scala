@@ -108,10 +108,6 @@ object Dedup {
     */
   private case class ShingleCorpus(docToRep: DataFrame, sets: DataFrame)
 
-  def docSigsPublic(s: SparkSession, dir: String): DataFrame = {
-    val c = shingleCorpus(s, dir); c.sets.join(sigsOf(c.sets), "doc_id")
-  }
-
   private def shingleCorpus(s: SparkSession, dir: String): ShingleCorpus =
     shingleCorpusOf(Tables.load(s, dir, "documents"))
 
@@ -250,26 +246,11 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** 64-bit SimHash per doc via the native one-pass
-    * [[graft.functions.SimHash64]] expression (tokenize + per-token
-    * xxhash64 + ±1 votes + sign fold, row-local — the aggregate
-    * formulation it replaced is kept as [[simhashSqlOf]] and a spec
-    * pins them bit-identical).
-    */
-  def simhashDocsPublic(s: SparkSession, dir: String): DataFrame = {
-    val c = simhashCorpus(s, dir)
-    c.docToRep.join(c.uniq.withColumnRenamed("doc_id", "rep"), "rep")
-      .select("doc_id", "simhash")
-  }
-
   /** Exact-collapsed simhash corpus: identical TEXTS (simhash is over
     * the token stream, not the set) collapse to the smallest doc_id;
     * votes are aggregated per unique text only.
     */
   private case class SimhashCorpus(docToRep: DataFrame, uniq: DataFrame)
-
-  private def simhashCorpus(s: SparkSession, dir: String): SimhashCorpus =
-    simhashCorpusOf(Tables.load(s, dir, "documents"))
 
   private def simhashCorpusOf(docs: DataFrame): SimhashCorpus = {
     // No cut on the projection: the digest is one cheap md5 pass, so

@@ -94,59 +94,71 @@ class AcquireSpec extends graft.SparkSpec {
   }
 
   test("range ingest equals chained single-month runs, counters carried") {
-    // two month dumps with DIFFERENT game months and a shared player:
-    // alice is White in every game, so her cumulative count in April
-    // proves (or disproves) the March->April carry
+    // three month dumps with DIFFERENT game months and a shared player:
+    // alice is White in every game, so her cumulative counts prove (or
+    // disprove) the carry from month to month
     def gameTxt(i: Int, date: String, time: String): String =
       PgnFixtures.gameTxt(i, date, time, sitePrefix = "range")
-    val march = gameTxt(1, "2024.03.05", "10:00:00") + "\n" +
-      gameTxt(2, "2024.03.20", "11:00:00")
-    val april = gameTxt(3, "2024.04.02", "09:00:00") + "\n" +
-      gameTxt(4, "2024.04.25", "12:00:00")
     val mirror = Files.createTempDirectory("lichess_mirror_range")
-    PgnFixtures.writeDump(mirror, 2024, 3, march.getBytes("UTF-8"))
-    PgnFixtures.writeDump(mirror, 2024, 4, april.getBytes("UTF-8"))
+    for ((m, games) <- Seq(
+        3 -> Seq(gameTxt(1, "2024.03.05", "10:00:00"), gameTxt(2, "2024.03.20", "11:00:00")),
+        4 -> Seq(gameTxt(3, "2024.04.02", "09:00:00"), gameTxt(4, "2024.04.25", "12:00:00")),
+        5 -> Seq(gameTxt(5, "2024.05.01", "08:00:00"), gameTxt(6, "2024.05.30", "23:00:00"))))
+      PgnFixtures.writeDump(mirror, 2024, m, games.mkString("\n").getBytes("UTF-8"))
     val base = Some(mirror.toUri.toString)
-
-    val outA = Files.createTempDirectory("range_out").toString
-    val stateA = Files.createTempDirectory("range_state").toString
-    IngestMain.run(spark, Array("--start=2024-03", "--end=2024-04", outA, stateA),
-      stagingDir = Files.createTempDirectory("range_staging").toString,
-      baseUrl = base)
-
-    val outB = Files.createTempDirectory("chain_out").toString
-    val stateB = Files.createTempDirectory("chain_state").toString
-    val stagingB = Files.createTempDirectory("chain_staging").toString
-    IngestMain.run(spark, Array("--month=2024-03", outB, stateB), stagingB, base)
-    IngestMain.run(spark, Array("--month=2024-04", outB, stateB), stagingB, base)
+    /** (sink, state) after running each argument list in turn. */
+    def ingest(runs: Seq[String]*): (String, String) = {
+      val out = Files.createTempDirectory("range_out").toString
+      val state = Files.createTempDirectory("range_state").toString
+      val staging = Files.createTempDirectory("range_staging").toString
+      for (a <- runs) IngestMain.run(spark, (a :+ out :+ state).toArray, staging, base)
+      (out, state)
+    }
+    val range = Seq("--start=2024-03", "--end=2024-05")
+    def month(m: Int) = Seq(f"--month=2024-$m%02d")
 
     def rows(dir: String) = {
       val df = spark.read.parquet(dir)
       df.orderBy("ID", "Role_player")
         .collect().map(_.toSeq.map(String.valueOf)).toSeq
     }
-    val (a, b) = (rows(outA), rows(outB))
-    assert(a.length === 8) // 4 games x 2 roles
-    assert(a === b)
-    // both months survived in the sink (dynamic partition overwrite:
-    // the April write must NOT clobber the March partition)
-    assert(spark.read.parquet(outA).select("year_month").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq === Seq("2024_03", "2024_04"))
-    // the carry is non-vacuous: alice's count in her last April game
-    // is 4 (2 March + 2 April), not 2
-    val lastApril = spark.read.parquet(outA)
-      .filter(col("Player") === "alice" && col("year_month") === "2024_04")
-      .agg(max(col("Player_cum_games_total"))).head().getInt(0)
-    assert(lastApril === 4)
-    // and the two state tables agree
-    def state(d: String) = {
+    def committed(d: String) = {
       val fs = new org.apache.hadoop.fs.Path(d)
         .getFileSystem(spark.sessionState.newHadoopConf())
-      val p = StateSwap.resolve(fs, d).get.toString
-      spark.read.parquet(p).orderBy("name", "Event")
-        .collect().map(_.toSeq.map(String.valueOf)).toSeq
+      val p = StateSwap.resolve(fs, d).get
+      (spark.read.parquet(p.toString).orderBy("name", "Event")
+        .collect().map(_.toSeq.map(String.valueOf)).toSeq,
+        StateSwap.appliedIds(fs, p))
     }
-    assert(state(stateA) === state(stateB))
+    def maxCum(out: String, ym: String): Int = spark.read.parquet(out)
+      .filter(col("Player") === "alice" && col("year_month") === ym)
+      .agg(max(col("Player_cum_games_total"))).head().getInt(0)
+    val allIds = Seq(3, 4, 5).map(IngestMain.monthId(2024, _)).toSet
+
+    // a fresh range (one grouped pass over all three months), and the
+    // same range after April was committed by a --month run (one pass
+    // over March and May, around the committed middle month), each
+    // against single-month runs in the same order
+    for ((grouped, chained) <- Seq(
+        (Seq(range), Seq(month(3), month(4), month(5))),
+        (Seq(month(4), range), Seq(month(4), month(3), month(5))))) {
+      val (outA, stateA) = ingest(grouped: _*)
+      val (outB, stateB) = ingest(chained: _*)
+      val a = rows(outA)
+      assert(a.length === 12) // 6 games x 2 roles
+      assert(a === rows(outB))
+      // every month survived in the sink (dynamic partition overwrite:
+      // no pass clobbers another's partitions)
+      assert(spark.read.parquet(outA).select("year_month").distinct()
+        .collect().map(_.getString(0)).sorted.toSeq ===
+        Seq("2024_03", "2024_04", "2024_05"))
+      // the carry is non-vacuous: alice's count in her last May game
+      // is 6 (2 games in each month), not 2
+      assert(maxCum(outA, "2024_05") === 6)
+      // the state tables and the committed month ids agree
+      assert(committed(stateA) === committed(stateB))
+      assert(committed(stateA)._2 === allIds)
+    }
   }
 
   test("--months keeps only the listed months-of-year within a range") {
@@ -337,6 +349,40 @@ class AcquireSpec extends graft.SparkSpec {
     // and each roll holds exactly one game
     assert(rolled.groupBy("_roll").count()
       .agg(max(col("count"))).head().getLong(0) === 1L)
+  }
+
+  test("--dir-ndjson over a range dumps each month as two --month runs do") {
+    val mirror = Files.createTempDirectory("ndjson_range_mirror")
+    for (m <- Seq(3, 4))
+      PgnFixtures.writeDump(mirror, 2024, m, (1 to 2).map(i =>
+        PgnFixtures.gameTxt(m * 10 + i, f"2024.$m%02d.0$i", sitePrefix = "ndr"))
+        .mkString("\n").getBytes("UTF-8"))
+    val base = Some(mirror.toUri.toString)
+    def dump(runs: Seq[String]*): String = {
+      val nd = Files.createTempDirectory("ndjson_range").toString
+      val out = Files.createTempDirectory("ndjson_range_out").toString
+      val staging = Files.createTempDirectory("ndjson_range_staging").toString
+      for (a <- runs)
+        IngestMain.run(spark, (s"--dir-ndjson=$nd" +: a :+ out).toArray, staging, base)
+      nd
+    }
+    val ranged = dump(Seq("--start=2024-03", "--end=2024-04"))
+    val chained = dump(Seq("--month=2024-03"), Seq("--month=2024-04"))
+    // one subdir per staged dump, named after it
+    def subdirs(nd: String) = Files.list(Paths.get(nd)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).sorted
+    val names = Seq(3, 4).map(Acquire.monthlyDumpName(2024, _))
+    assert(subdirs(ranged) === names)
+    assert(subdirs(chained) === names)
+    for (n <- names) {
+      def rowsOf(nd: String) = {
+        val df = spark.read.json(s"$nd/$n")
+        df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+      }
+      val r = rowsOf(ranged)
+      assert(r.length === 2, n)
+      assert(r === rowsOf(chained), n)
+    }
   }
 
   test("a failed fetch leaves no trusted file behind") {
